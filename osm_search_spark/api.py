@@ -16,6 +16,11 @@ reference can switch call-for-call:
 Every method returns a DataFrame (collect() for the "HTTP response").
 Queries are validated like the reference (regex at
 controllers/searcher.go:26-28).
+
+Query-independent work happens once, in __init__: search and autocomplete
+read the BM25F impacts table the index materializes at load, and
+nearby_places starts its kNN at the ring that already covers the radius
+(knn.radius_ring), so one kNN round answers it.
 """
 
 from __future__ import annotations
@@ -28,7 +33,7 @@ from pyspark.sql import functions as F
 from .operators import spell
 from .operators.spell import BM25FIndex
 from .operators.geofence import geofence_status as _geofence_status
-from .operators.knn import knn_join
+from .operators.knn import knn_join, radius_ring
 
 VALID_QUERY = re.compile(r"^[A-Za-z0-9_ +,.()]+$")
 
@@ -76,9 +81,11 @@ class SparkSearcher:
             [(0, float(lat), float(lon))], "probe_id long, plat double, plon double"
         )
         objects = self.places.select("id", "lat", "lon", "name", "address", "type")
+        ring = 1 if radius_km is None else radius_ring(radius_km, lat)
         res = knn_join(
             probes, objects, k=k, radius_km=radius_km, feature=feature,
             obj_id="id", olat="lat", olon="lon", offset=offset,
+            initial_ring=ring,
         )
         return (
             res.join(

@@ -38,15 +38,22 @@ object domain (one min/max aggregate over object cell coords) — a probe far
 from all objects terminates in O(log(domain)) rounds instead of exploding
 a (2r+1)^2 disk per round.
 
-Scale posture: objects shuffle once onto the persisted index; each round
-joins only *unfinished* probes against ~10^2 coarse cells each, so dense
-areas finish in round 1 and only sparse-area probes escalate, at constant
-per-round cost.
+Scale posture: each round joins only *unfinished* probes against ~10^2
+coarse cells each, so dense areas finish in round 1 and only sparse-area
+probes escalate, at constant per-round cost. Round 1 scans the object
+table directly; the object index is persisted only once a second round is
+coming. The pending and finished probe counts that end the loop are
+observed inside the per-round checkpoint jobs, so no round pays a count
+job. A radius query can start at ``radius_ring(radius_km, lat)`` (a
+driver-side ring for one probe latitude) and finish in one round; bulk
+callers keep ring 1, where dense probes finish anyway.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import math
+
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..functions import cells as C
@@ -62,6 +69,42 @@ def _coarse_scale(r_outer: int) -> int:
     while (2 * r_outer) >> e > 8:
         e += 1
     return e
+
+
+def radius_ring(radius_km: float, lat: float, res: int = C.TILE_RES) -> int:
+    """Smallest Chebyshev ring R whose bound_km(R) at latitude `lat` is at
+    least `radius_km` — the ring at which a radius probe there finishes by
+    exhaustion. Passed as knn_join's initial_ring, a one-probe radius query
+    runs a single round. Falls back to ring 1 (plain annulus growth) when
+    no ring reaches the radius before the latitude band hits the pole,
+    where bound_km drops to 0."""
+    size = C.cell_size_deg(res)
+    # cos <= 1, so no ring below radius / (size * KM_PER_DEG * SAFETY) can
+    # reach the radius: start the scan there
+    R = max(1, math.ceil(radius_km / (size * KM_PER_DEG * SAFETY)))
+    while abs(lat) + (R + 1) * size < 90.0:
+        if _bound_km(R, abs(lat), size) >= radius_km:
+            return R
+        R += 1
+    return 1
+
+
+def _bound_km(R: int, abs_lat: float, size: float) -> float:
+    """Driver twin of knn_join's per-probe bound_km column."""
+    band = min(abs_lat + float(R + 1) * size, 90.0)
+    return float(R) * size * KM_PER_DEG * SAFETY * max(math.cos(math.radians(band)), 0.0)
+
+
+def _counted_checkpoint(
+    df: DataFrame, where: Column | None = None
+) -> tuple[DataFrame, int]:
+    """Eager localCheckpoint of `df` plus the number of its rows matching
+    `where` (all rows by default), observed inside the checkpoint's own
+    job — the counter costs no extra Spark job."""
+    obs = Observation()
+    hit = F.lit(1) if where is None else F.when(where, 1)
+    out = df.observe(obs, F.count(hit).alias("n")).localCheckpoint(eager=True)
+    return out, obs.get["n"]
 
 
 def knn_join(
@@ -184,7 +227,7 @@ def knn_join(
     have_extent = False
     r_prev = -1
     r = max(1, initial_ring)
-    pend = pend.localCheckpoint(eager=True)
+    pend, n_pend = _counted_checkpoint(pend)
     for _ in range(max_rounds):
         e = _coarse_scale(r)
         ring = C.annulus_cells(F.col("pix"), F.col("piy"), r, r_prev, e, res)
@@ -257,7 +300,6 @@ def knn_join(
                     "fin",
                     (F.col("dist_km") <= bound_km(r)) | exhausted_cond,
                 )
-                .localCheckpoint(eager=True)
             )
         else:
             w = Window.partitionBy(probe_id).orderBy("dist_km", obj_id)
@@ -270,34 +312,31 @@ def knn_join(
                 .withColumn("rank", F.row_number().over(w))
                 .filter(F.col("rank") <= want)
                 .withColumn("fin", quality_cond | exhausted_cond)
-                .localCheckpoint(eager=True)
             )
+        ranked, n_fin = _counted_checkpoint(
+            ranked, F.col("fin") & (F.col("rank") == 1)
+        )
 
         done_parts.append(
             ranked.filter("fin").select(
                 probe_id, "rank", obj_id, olat, olon, "dist_km"
             )
         )
-        # Fast-path exit (round 9, guide §2.4): when every pending probe
-        # appears in ranked as finished (fin is probe-uniform and fin
-        # probe ids are a subset of pend ids; rank 1 occurs exactly once
-        # per probe in both ranked shapes), the next pend is provably
-        # empty — two O(tiny) counts over already-checkpointed frames
-        # replace the anti-join pend checkpoint + isEmpty jobs the common
-        # finish-in-one-round case was paying. Duplicate probe ids or
-        # candidate-less exhaustion finishes simply fail the equality and
-        # fall through to the exact pend update below.
-        if (
-            ranked.filter(F.col("fin") & (F.col("rank") == 1)).count()
-            == pend.count()
-        ):
+        # Round exit without count jobs: the ranked checkpoint observed how
+        # many probes finished (fin is probe-uniform and rank 1 occurs once
+        # per probe), and the pend checkpoint how many probes were pending.
+        # When they agree the next pend is provably empty. Duplicate probe
+        # ids or candidate-less exhaustion finishes fail the equality and
+        # fall through to the exact pend update, whose own observed count
+        # ends the loop when it reaches zero.
+        if n_fin == n_pend:
             carried = None
             break
         fin_ids = ranked.filter("fin").select(probe_id)
-        pend = pend.filter(~exhausted_cond).join(
-            fin_ids, probe_id, "leftanti"
-        ).localCheckpoint(eager=True)
-        if pend.isEmpty():
+        pend, n_pend = _counted_checkpoint(
+            pend.filter(~exhausted_cond).join(fin_ids, probe_id, "leftanti")
+        )
+        if n_pend == 0:
             carried = None
             break
         if not obj_persisted:
@@ -309,8 +348,8 @@ def knn_join(
         if not have_extent:
             # another round IS coming: attach the domain extent exactly
             # once, reading the persisted obj index. Deliberately AFTER
-            # the isEmpty check — the common finish-in-one-round case
-            # never pays the extent aggregate.
+            # the round exit — the common finish-in-one-round case never
+            # pays the extent aggregate.
             pend = (
                 pend.drop("r_needed")
                 .crossJoin(F.broadcast(ext))

@@ -59,30 +59,6 @@ ADDRESS_WEIGHT, ADDRESS_B = 1.0, 0.3
 DEFAULT_MAX_CANDIDATES_PER_TOKEN = 64
 
 
-def spell_candidates(
-    term_dict: DataFrame, token: str, max_dist: int = 2,
-    max_candidates: int = 10000,
-) -> list[str]:
-    """Vocab terms within edit distance 1, then 2 (each block sorted).
-
-    The collect is BOUNDED (deterministic (d, term) order, max_candidates
-    rows) — a pathological token against a web-scale dictionary cannot OOM
-    the driver; the cap never binds on realistic vocabularies."""
-    cand = (
-        term_dict.select(
-            "term", F.levenshtein(F.lit(token), F.col("term")).alias("d")
-        )
-        .filter(F.col("d") <= max_dist)
-        .orderBy("d", "term")
-        .limit(max_candidates)
-        .collect()
-    )
-    out = []
-    for d in range(1, max_dist + 1):
-        out.extend(sorted(r["term"] for r in cand if r["d"] == d))
-    return out
-
-
 def candidate_queries(per_token: list[list[str]]) -> list[list[str]]:
     """Cartesian product fold (GetCorrectQueryCandidates)."""
     temp: list[list[str]] = [[]]
@@ -283,10 +259,21 @@ def _batch_interps(
 
 
 class BM25FIndex:
-    """Prebuilt per-field postings + stats — the 'loaded index' of the
-    reference (Searcher.LoadMainIndex, searcher.go:84-133). Build once,
-    query many; freeform_search/autocomplete accept it to avoid
-    re-tokenizing the corpus per query."""
+    """The 'loaded index' of the reference (Searcher.LoadMainIndex,
+    searcher.go:84-133): ONE materialized impacts(term, doc_id, c) table.
+
+    Every BM25F quantity except a query's term list is fixed per index —
+    tf, field lengths and their averages, df over BOTH fields, idf — so
+    the table stores each (term, doc) pair's final contribution summed
+    over the two fields:
+
+        c = idf * sum_f wtd_f / (K1 + wtd_f),
+        wtd_f = W_f * tf_f / (1 + NAME_B * (dl_f / avgdl_f - 1))
+
+    (NAME_B in both fields — the reference's quirk, searcher.go:301). A
+    query only filters the table on its terms and sums c per doc, so no
+    request recomputes df, the field joins or the weight formula. Building
+    costs one stats collect plus one checkpoint job."""
 
     def __init__(
         self,
@@ -300,36 +287,57 @@ class BM25FIndex:
         stems every indexed token, indexer.go:804); query tokens must then
         be stemmed too (correct_query(stem_roots=...)), like
         searcher.go:158."""
-        self.n_docs = places.count()
         self.stem_roots = stem_roots
-        self.fields: dict[str, tuple[DataFrame, DataFrame, float]] = {}
-        for field, col in (("name", name_col), ("address", address_col)):
-            toks = search.doc_tokens(places, doc_id, col, stem_roots=stem_roots)
-            postings = search.build_postings(toks).persist()
-            stats = search.doc_stats(toks).persist()
-            avgdl = stats.agg(F.avg("dl")).collect()[0][0] or 1.0
-            self.fields[field] = (postings, stats, float(avgdl))
-
-    def field_frame(self, field: str, query_terms: list[str]) -> DataFrame:
-        postings, stats, avgdl = self.fields[field]
-        return (
-            postings.filter(F.col("term").isin(query_terms))
-            .join(stats, "doc_id")
-            .withColumn("field", F.lit(field))
-            .withColumn("avgdl", F.lit(avgdl))
+        toks = [
+            search.doc_tokens(places, doc_id, col, stem_roots=stem_roots)
+            for col in (name_col, address_col)
+        ]
+        stats = [search.doc_stats(t) for t in toks]
+        n_docs, avg_name, avg_addr = (
+            stats[0].agg(F.count("*"), F.avg("dl"))
+            .crossJoin(stats[1].agg(F.avg("dl")))
+            .first()
+        )
+        sat = None
+        for t, st, w, avgdl in zip(
+            toks, stats, (NAME_WEIGHT, ADDRESS_WEIGHT), (avg_name, avg_addr)
+        ):
+            wtd = w * (
+                F.col("tf")
+                / (1.0 + NAME_B * (F.col("dl") / F.lit(float(avgdl or 1.0)) - 1.0))
+            )
+            part = search.build_postings(t).join(st, "doc_id").select(
+                "term", "doc_id", (wtd / (K1_BM25F + wtd)).alias("sat")
+            )
+            sat = part if sat is None else sat.unionByName(part)
+        idf = F.log10(F.lit(float(n_docs)) - F.col("df") + 0.5) - F.log10(
+            F.col("df") + 0.5
+        )
+        # one shuffle by term serves both the (term, doc) field sum and the
+        # per-term df window (df = distinct docs = rows per term after it)
+        self.impacts = (
+            sat.repartition("term")
+            .groupBy("term", "doc_id")
+            .agg(F.sum("sat").alias("sat"))
+            .withColumn("df", F.count("*").over(Window.partitionBy("term")))
+            .select("term", "doc_id", (F.col("sat") * idf).alias("c"))
+            .localCheckpoint(eager=True)
         )
 
-    def field_frame_df(self, field: str, terms_df: DataFrame) -> DataFrame:
-        """field_frame with the term filter as a broadcast semi-join — the
-        batch form (the term set comes from a whole query batch, not a
-        Python list)."""
-        postings, stats, avgdl = self.fields[field]
-        return (
-            postings.join(F.broadcast(terms_df.select("term")), "term", "leftsemi")
-            .join(stats, "doc_id")
-            .withColumn("field", F.lit(field))
-            .withColumn("avgdl", F.lit(avgdl))
-        )
+
+def _impact_scores(rows: DataFrame, keys: list[str]) -> DataFrame:
+    """(*keys, score, n_terms) over matched impacts rows.
+
+    Each group's contributions are summed in TERM order: a plain sum()
+    depends on the order rows arrive in, so docs with identical per-term
+    contributions could score an ulp apart and break the doc_id tie-break.
+    n_terms counts the matched distinct terms (one impacts row per (term,
+    doc)), which is the autocomplete AND check."""
+    cs = F.array_sort(F.collect_list(F.struct("term", "c")))
+    return rows.groupBy(*keys).agg(
+        F.aggregate(cs, F.lit(0.0), lambda acc, x: acc + x["c"]).alias("score"),
+        F.count("*").alias("n_terms"),
+    )
 
 
 def bm25f_scores(
@@ -338,34 +346,13 @@ def bm25f_scores(
     doc_id: str = "id",
     name_col: str = "name",
     address_col: str = "address",
-    k1: float = K1_BM25F,
-    name_w: float = NAME_WEIGHT,
-    name_b: float = NAME_B,
-    addr_w: float = ADDRESS_WEIGHT,
-    addr_b: float = NAME_B,  # faithful: reference uses NAME_B for both
     index: BM25FIndex | None = None,
 ) -> DataFrame:
     """(doc_id, score) — field-weighted BM25F over name + address."""
     if index is None:
         index = BM25FIndex(places, doc_id, name_col, address_col)
-    n_docs = index.n_docs
-    tf = index.field_frame("name", query_terms).unionByName(
-        index.field_frame("address", query_terms)
-    )
-    df_t = tf.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
-    idf = F.log10(F.lit(float(n_docs)) - F.col("df") + 0.5) - F.log10(F.col("df") + 0.5)
-    w = F.when(
-        F.col("field") == "name",
-        name_w * (F.col("tf") / (1.0 + name_b * (F.col("dl") / F.col("avgdl") - 1.0))),
-    ).otherwise(
-        addr_w * (F.col("tf") / (1.0 + addr_b * (F.col("dl") / F.col("avgdl") - 1.0)))
-    )
-    scored = (
-        tf.join(F.broadcast(df_t), "term")
-        .withColumn("wtd", w)
-        .withColumn("contrib", (F.col("wtd") / (k1 + F.col("wtd"))) * idf)
-    )
-    return scored.groupBy("doc_id").agg(F.sum("contrib").alias("score"))
+    rows = index.impacts.filter(F.col("term").isin(query_terms))
+    return _impact_scores(rows, ["doc_id"]).select("doc_id", "score")
 
 
 def freeform_search(
@@ -419,15 +406,14 @@ def autocomplete(
     )
     results = None
     for qi, terms in enumerate(interps):
-        scores = bm25f_scores(places, terms, index=index)
-        # AND semantics (scoreBM25FAutocomplete, searcher.go:493-532): doc
-        # must contain every query term in name+address. Derived from the
-        # PREBUILT per-field postings — a term is in the doc iff it has a
-        # posting in either field — so no corpus re-tokenize per
-        # interpretation (the postings already carry exactly this).
-        have_all = _docs_with_all_terms(index, terms)
-        part = scores.join(have_all, "doc_id", "leftsemi").withColumn(
-            "interp", F.lit(qi)
+        # AND semantics (searcher.go:493-532): the doc matched every
+        # distinct query term in name or address
+        part = (
+            _impact_scores(
+                index.impacts.filter(F.col("term").isin(terms)), ["doc_id"]
+            )
+            .filter(F.col("n_terms") == len(set(terms)))
+            .select("doc_id", "score", F.lit(qi).alias("interp"))
         )
         results = part if results is None else results.unionByName(part)
     top = search._ranked_topk(
@@ -440,80 +426,28 @@ def autocomplete(
     )
 
 
-def _docs_with_all_terms(index: "BM25FIndex", terms: list[str]) -> DataFrame:
-    """(doc_id) docs whose name+address postings cover EVERY query term —
-    the autocomplete AND-intersection from the prebuilt index (zero corpus
-    scans; the postings frames are persisted and term-filtered)."""
-    name_p, _, _ = index.fields["name"]
-    addr_p, _, _ = index.fields["address"]
-    both = name_p.select("doc_id", "term").unionByName(
-        addr_p.select("doc_id", "term")
-    )
-    return (
-        both.filter(F.col("term").isin(terms))
-        .groupBy("doc_id")
-        .agg(F.countDistinct("term").alias("nt"))
-        .filter(F.col("nt") == len(set(terms)))
-        .select("doc_id")
-    )
-
-
 # --- batched BM25F serving: many queries / interpretations, ONE plan ---------
 
 def batch_bm25f_scores(
-    index: BM25FIndex,
-    interps: DataFrame,
-    require_all: bool = False,
-    k1: float = K1_BM25F,
-    name_w: float = NAME_WEIGHT,
-    name_b: float = NAME_B,
-    addr_w: float = ADDRESS_WEIGHT,
-    addr_b: float = NAME_B,  # faithful: reference uses NAME_B for both
+    index: BM25FIndex, interps: DataFrame, require_all: bool = False
 ) -> DataFrame:
     """(query_id, interp, doc_id, score) for a whole batch of query
     interpretations — `interps` is (query_id long, interp int,
     terms array<string>).
 
-    Shuffle shape mirrors batch_bm25_search: the per-field postings enrich
-    on the CORPUS side (query-independent, persisted in the index); the
-    exploded (query_id, interp, term) batch BROADCASTS onto it; one
-    repartition by query_id feeds both the score aggregate and any top-k
-    window downstream. require_all=True adds the autocomplete
-    AND-intersection (every distinct query term must have a posting in
-    name or address — searcher.go:493-532) from the same joined rows, so
-    the AND check costs no extra corpus pass."""
-    n_docs = index.n_docs
+    The exploded (query_id, interp, term) batch BROADCASTS onto the
+    index's impacts table; one repartition by query_id feeds both the
+    score aggregate and any top-k window downstream. require_all=True adds
+    the autocomplete AND-intersection (every distinct query term matched
+    in name or address — searcher.go:493-532) from the same joined rows,
+    so the AND check costs no extra pass."""
     qt = interps.select(
         "query_id", "interp",
         F.explode(F.array_distinct("terms")).alias("term"),
     )
-    terms_df = qt.select("term").distinct()
-    tf = index.field_frame_df("name", terms_df).unionByName(
-        index.field_frame_df("address", terms_df)
-    )
-    df_t = tf.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
-    idf = F.log10(F.lit(float(n_docs)) - F.col("df") + 0.5) - F.log10(
-        F.col("df") + 0.5
-    )
-    w = F.when(
-        F.col("field") == "name",
-        name_w * (F.col("tf") / (1.0 + name_b * (F.col("dl") / F.col("avgdl") - 1.0))),
-    ).otherwise(
-        addr_w * (F.col("tf") / (1.0 + addr_b * (F.col("dl") / F.col("avgdl") - 1.0)))
-    )
-    contrib = (
-        tf.join(F.broadcast(df_t), "term")
-        .withColumn("wtd", w)
-        .withColumn("contrib", (F.col("wtd") / (k1 + F.col("wtd"))) * idf)
-    )
-    scored = (
-        F.broadcast(qt).join(contrib, "term")
-        .repartition("query_id")
-        .groupBy("query_id", "interp", "doc_id")
-        .agg(
-            F.sum("contrib").alias("score"),
-            F.countDistinct("term").alias("_nt"),
-        )
+    scored = _impact_scores(
+        F.broadcast(qt).join(index.impacts, "term").repartition("query_id"),
+        ["query_id", "interp", "doc_id"],
     )
     if require_all:
         need = interps.select(
@@ -521,7 +455,7 @@ def batch_bm25f_scores(
             F.size(F.array_distinct("terms")).alias("_n_terms"),
         )
         scored = scored.join(F.broadcast(need), ["query_id", "interp"]).filter(
-            F.col("_nt") == F.col("_n_terms")
+            F.col("n_terms") == F.col("_n_terms")
         )
     return scored.select("query_id", "interp", "doc_id", "score")
 

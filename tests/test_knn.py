@@ -142,10 +142,11 @@ def test_radius_knn_extreme_latitude(spark):
 
 def test_single_round_fast_path_skips_pend_jobs(spark, monkeypatch):
     # round 9: a probe set that finishes entirely in round 1 must take the
-    # fast-path exit (two tiny counts) — no isEmpty probe job, and the
-    # object index is never persisted (deferred persist: caching pays only
-    # when a second round actually reads it). A far probe that needs many
-    # rounds must persist the index exactly once and release it on return.
+    # fast-path exit (counts observed in the checkpoint jobs) — no isEmpty
+    # probe job, and the object index is never persisted (deferred persist:
+    # caching pays only when a second round actually reads it). A far probe
+    # that needs many rounds must persist the index exactly once and
+    # release it on return.
     from pyspark.sql.classic.dataframe import DataFrame as CDF
 
     persists, empties = [], []
@@ -171,3 +172,53 @@ def test_single_round_fast_path_skips_pend_jobs(spark, monkeypatch):
     res2 = knn_join(far, objects, k=3, res=14).collect()
     assert len(res2) == 3
     assert len(persists) == 1, "multi-round call persists the index once"
+
+
+def test_radius_ring_is_the_smallest_covering_ring():
+    # radius_ring(r, lat) is the first ring whose bound_km at lat reaches
+    # the radius: the ring one smaller falls short
+    from osm_search_spark.functions import cells as C
+    from osm_search_spark.operators.knn import _bound_km, radius_ring
+
+    size = C.cell_size_deg(C.TILE_RES)
+    for lat in (0.0, -6.0, 60.0):
+        for radius in (0.5, 5.0, 50.0):
+            R = radius_ring(radius, lat)
+            assert _bound_km(R, abs(lat), size) >= radius, (lat, radius, R)
+            assert _bound_km(R - 1, abs(lat), size) < radius, (lat, radius, R)
+    # near the pole no ring's bound reaches 5 km before the band hits 90
+    # degrees: the defined fallback is ring 1 (plain annulus growth)
+    assert radius_ring(5.0, 89.9) == 1
+    assert radius_ring(5.0, -89.9) == 1
+
+
+def test_radius_ring_start_finishes_in_one_round(spark, monkeypatch):
+    # at lat 60 the cos-shrunk bound needs a ~2x larger ring than at the
+    # equator; starting there, a one-probe radius query finishes in round 1
+    # (no object-index persist) and returns every in-radius neighbor
+    from pyspark.sql.classic.dataframe import DataFrame as CDF
+
+    from osm_search_spark.functions.geometry import haversine_km_np
+    from osm_search_spark.operators.knn import radius_ring
+
+    persists = []
+    orig = CDF.persist
+    monkeypatch.setattr(
+        CDF, "persist",
+        lambda self, *a, **k: (persists.append(1), orig(self, *a, **k))[1],
+    )
+    rng = np.random.default_rng(7)
+    lat = 60.0 + rng.uniform(-0.1, 0.1, 300)
+    lon = 10.0 + rng.uniform(-0.2, 0.2, 300)
+    objects = spark.createDataFrame(
+        [(i, float(lat[i]), float(lon[i])) for i in range(300)],
+        "obj_id long, olat double, olon double",
+    )
+    res = knn_join(
+        _probes(spark, 60.0, 10.0), objects, k=20, radius_km=3.0,
+        initial_ring=radius_ring(3.0, 60.0),
+    ).orderBy("rank").collect()
+    assert not persists
+    d = haversine_km_np(60.0, 10.0, lat, lon)
+    order = [i for i in np.lexsort((np.arange(300), d)) if d[i] <= 3.0][:20]
+    assert [r["obj_id"] for r in res] == order and len(order) >= 5

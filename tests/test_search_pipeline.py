@@ -160,3 +160,48 @@ def test_batch_autocomplete_job_count_constant(spark, corpus):
     small = jobs_for(small_q, "ac_small")
     big = jobs_for(big_q, "ac_big")
     assert big == small, (small, big)
+
+
+
+def test_bm25f_equal_docs_tie_by_id_with_equal_scores(spark):
+    # 27 "Taman Mini Indonesia <k>_<j>" places have identical per-term
+    # contributions, so they must score bitwise-equal whatever order their
+    # rows are summed in (summing in arrival order left them an ulp apart
+    # across partitions) and then page in ascending id, the doc_id
+    # tie-break, on both the single and the batch path
+    streets = ["Jalan Sentosa Harapan", "Jalan Dunia Baru", "Jalan Mulwo Apel",
+               "Jalan Kebun Jeruk Apel", "Jalan Pantai Ancol", "Jalan Gambir",
+               "Jalan Pasar Minggu", "Jalan Adi Sucipto", "Jalan Ahmad Yani",
+               "Jalan Dani"]
+    pois = ["Dunia Fantasi", "Kebun Binatang Ragunan", "Monumen Nasional",
+            "Taman Mini Indonesia", "Universitas Indonesia", "Stasiun Gambir"]
+    rows = [(i, s, s) for i, s in enumerate(streets)] + [
+        (10 + j, f"{pois[j % 6]} {j // 20}_{j % 20}", "") for j in range(160)
+    ]
+    corpus = spark.createDataFrame(rows, "id long, name string, address string")
+    taman = [r[0] for r in rows if r[1].startswith("Taman")]
+    want = taman[:10]  # ids ascend: 13, 19, 25, ...
+    # the same corpus in several partition layouts: one score for all
+    got = set()
+    for n_parts in (1, 4):
+        places = corpus.repartition(n_parts)
+        scores = spell.bm25f_scores(places, ["taman", "mini", "indonesia"])
+        got |= {r["score"] for r in scores.collect() if r["doc_id"] in taman}
+    assert len(got) == 1, got
+
+    places = corpus.repartition(4).cache()
+    toks = search.doc_tokens(places, doc_id="id", text="name").unionByName(
+        search.doc_tokens(places, doc_id="id", text="address")
+    )
+    td = search.term_dict(toks)
+    counts = ngram_lm.ngram_counts(toks, max_n=4, oov_threshold=1)
+    idx = spell.BM25FIndex(places)
+
+    single = spell.autocomplete(spark, places, td, counts, "taman mini ind", k=10, index=idx)
+    assert [r["id"] for r in single.collect()] == want
+    batch = spell.batch_autocomplete(
+        spark, places, td, counts, ["taman mini ind"], k=10, index=idx
+    ).collect()
+    assert [r["id"] for r in batch] == want
+    assert len({r["score"] for r in batch}) == 1
+    places.unpersist()
